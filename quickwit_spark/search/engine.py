@@ -23,6 +23,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import threading
 from dataclasses import dataclass
 
 import numpy as np
@@ -125,6 +126,7 @@ class SegmentReader:
             np.float32(self.num_docs)) if self.num_docs else np.float32(0)
         self._fn_ids: np.ndarray | None = None
         self._doc_cols: dict[str, np.ndarray] = {}
+        self._docs_tbl: pa.Table | None = None
         self._src_docs: list | None = None
         self._src_vals: dict = {}
         self._src_kinds: dict | None = None
@@ -192,6 +194,52 @@ class SegmentReader:
             self._doc_cols[key] = cached
             self._pin(64 * len(cached))
         return cached
+
+    def doc_rows(self, ids: list[int]) -> list[dict]:
+        """Doc-store rows of in-segment doc ids, in the order given.
+
+        `_seg_doc` is the row position in every writer (build, merge,
+        delete rewrite), so a docs.parquet within CACHE_FILE_BYTES is
+        read once, pinned against the reader budget and addressed by
+        position; a larger one is read per call with the ids pushed
+        down as a filter. Values render as hit JSON carries them: NaN
+        and NaT as None, ip fields in their text form, temporal and
+        nested columns in pandas' form (Timestamp, ndarray)."""
+        path = os.path.join(self.seg_dir, "docs.parquet")
+        if self._docs_tbl is None and \
+                os.path.getsize(path) <= self.CACHE_FILE_BYTES:
+            tbl = pq.read_table(path)
+            if not np.array_equal(tbl.column("_seg_doc").to_numpy(),
+                                  np.arange(tbl.num_rows)):
+                raise ValueError(f"{path}: _seg_doc is not the row "
+                                 "position; refusing positional fetch")
+            self._docs_tbl = tbl
+            self._pin(tbl.nbytes)
+        if self._docs_tbl is not None:
+            rows = self._docs_tbl.take(ids)
+        else:
+            rows = pq.read_table(path, filters=[("_seg_doc", "in", ids)])
+            pos = {d: i for i, d in
+                   enumerate(rows.column("_seg_doc").to_pylist())}
+            rows = rows.take([pos[d] for d in ids])
+        rows = rows.drop_columns(["_seg_doc"])
+        ftypes = self.meta.get("field_types", {})
+        cols: dict[str, list] = {}
+        for name, col in zip(rows.column_names, rows.columns):
+            t = col.type
+            if pa.types.is_temporal(t) or pa.types.is_nested(t):
+                cols[name] = [None if v is pd.NaT else v
+                              for v in col.to_pandas().tolist()]
+            elif pa.types.is_floating(t):
+                cols[name] = [None if v != v else v
+                              for v in col.to_pylist()]
+            elif ftypes.get(name) == "ip":
+                # the sortable hex transport stays internal
+                cols[name] = [None if v is None else hex_to_ip_display(v)
+                              for v in col.to_pylist()]
+            else:
+                cols[name] = col.to_pylist()
+        return [dict(zip(cols, vals)) for vals in zip(*cols.values())]
 
     def source_values(self, path: str,
                       keep_lists: bool = False) -> np.ndarray:
@@ -1610,23 +1658,68 @@ def get_reader(seg_dir: str, tokenizer: str) -> "SegmentReader":
 # invalidation protocol because segments are immutable and
 # content-addressed — a (seg_dir, request) pair can never go stale; a
 # delete/merge produces a NEW segment id (deletes.py:86-92) and the old
-# entries simply age out of the LRU. Lives at the leaf (segment_top_k)
-# so both the in-process path and the long-lived executor python workers
-# of the mapInPandas fan-out benefit.
+# entries simply age out. Lives at the leaf (segment_top_k) so both the
+# in-process path and the long-lived executor python workers of the
+# mapInPandas fan-out benefit.
+#
+# Eviction is a segmented LRU: a new entry waits in a probation segment
+# and moves to the protected segment (_LEAF_PROTECTED_SHARE of the
+# entries) on its first hit; protected overflow is demoted back to
+# probation, and eviction takes probation's LRU end first. A stream of
+# never-repeated requests (an ad-hoc client, a scan over many indexes)
+# then churns only probation, instead of flushing the entries other
+# clients keep re-using as a plain LRU would.
 # ---------------------------------------------------------------------------
-_LEAF_CACHE: "OrderedDict[tuple, tuple[int, pd.DataFrame]]" = OrderedDict()
+_LEAF_PROBATION: "OrderedDict[tuple, tuple[int, pd.DataFrame]]" = \
+    OrderedDict()
+_LEAF_PROTECTED: "OrderedDict[tuple, tuple[int, pd.DataFrame]]" = \
+    OrderedDict()
+_LEAF_LOCK = threading.Lock()
 LEAF_CACHE_MAX_ENTRIES = int(os.environ.get("QW_LEAF_CACHE_ENTRIES", "512"))
 LEAF_CACHE_MAX_ROWS = int(os.environ.get("QW_LEAF_CACHE_MAX_ROWS", "100000"))
+_LEAF_PROTECTED_SHARE = 0.8
 _LEAF_CACHE_STATS = {"hits": 0, "misses": 0}
 
 
 def leaf_cache_stats() -> dict:
-    return dict(_LEAF_CACHE_STATS, entries=len(_LEAF_CACHE))
+    return dict(_LEAF_CACHE_STATS,
+                entries=len(_LEAF_PROBATION) + len(_LEAF_PROTECTED))
 
 
 def clear_leaf_cache() -> None:
-    _LEAF_CACHE.clear()
-    _LEAF_CACHE_STATS.update(hits=0, misses=0)
+    with _LEAF_LOCK:
+        _LEAF_PROBATION.clear()
+        _LEAF_PROTECTED.clear()
+        _LEAF_CACHE_STATS.update(hits=0, misses=0)
+
+
+def _leaf_cache_get(key: tuple):
+    """The cached (count, top) of key, or None; a probation hit is
+    promoted, demoting the protected segment's LRU end on overflow."""
+    with _LEAF_LOCK:
+        ent = _LEAF_PROTECTED.get(key)
+        if ent is not None:
+            _LEAF_PROTECTED.move_to_end(key)
+        else:
+            ent = _LEAF_PROBATION.pop(key, None)
+            if ent is not None:
+                _LEAF_PROTECTED[key] = ent
+                cap = int(LEAF_CACHE_MAX_ENTRIES * _LEAF_PROTECTED_SHARE)
+                while len(_LEAF_PROTECTED) > cap:
+                    old, v = _LEAF_PROTECTED.popitem(last=False)
+                    _LEAF_PROBATION[old] = v
+        _LEAF_CACHE_STATS["hits" if ent is not None else "misses"] += 1
+        return ent
+
+
+def _leaf_cache_put(key: tuple, ent: tuple) -> None:
+    with _LEAF_LOCK:
+        if key in _LEAF_PROTECTED:   # a concurrent miss already got in
+            return
+        _LEAF_PROBATION[key] = ent
+        while len(_LEAF_PROBATION) + len(_LEAF_PROTECTED) > \
+                LEAF_CACHE_MAX_ENTRIES:
+            (_LEAF_PROBATION or _LEAF_PROTECTED).popitem(last=False)
 
 
 def segment_top_k(seg_dir: str, node: A.Node, k: int, tokenizer: str,
@@ -1646,19 +1739,14 @@ def segment_top_k(seg_dir: str, node: A.Node, k: int, tokenizer: str,
     key = (seg_dir, json.dumps(A.ast_to_json(node), sort_keys=True),
            int(k), bool(use_wand), repr(search_after), tokenizer,
            text_field, float(initial_theta))
-    ent = _LEAF_CACHE.get(key)
+    ent = _leaf_cache_get(key)
     if ent is not None:
-        _LEAF_CACHE.move_to_end(key)
-        _LEAF_CACHE_STATS["hits"] += 1
         return ent[0], ent[1].copy()
-    _LEAF_CACHE_STATS["misses"] += 1
     cnt, top = _segment_top_k_uncached(seg_dir, node, k, tokenizer,
                                        text_field, use_wand, search_after,
                                        initial_theta)
     if len(top) <= LEAF_CACHE_MAX_ROWS:
-        _LEAF_CACHE[key] = (cnt, top.copy())
-        while len(_LEAF_CACHE) > LEAF_CACHE_MAX_ENTRIES:
-            _LEAF_CACHE.popitem(last=False)
+        _leaf_cache_put(key, (cnt, top.copy()))
     return cnt, top
 
 
@@ -1776,8 +1864,12 @@ def _after_eq_mask(arr: np.ndarray, cursor, asc: bool
     distinguish i64::MAX from i64::MAX-1 (the reference's u64/i64
     cursor corner cases, rest-api-tests search_after/0001).  Missing
     values sort LAST in both directions, i.e. always strictly after
-    any real cursor value."""
+    any real cursor value. A missing cursor value (None/NaN, what a
+    hit missing the sort field echoes) ties with every missing row and
+    nothing sorts after it, so a client paging until empty stops."""
     n = len(arr)
+    if cursor is None or (isinstance(cursor, float) and cursor != cursor):
+        return np.zeros(n, dtype=bool), np.asarray(pd.isna(arr), bool)
     if arr.dtype == object:
         after = np.zeros(n, dtype=bool)
         eq = np.zeros(n, dtype=bool)
@@ -2056,27 +2148,25 @@ class IndexSearcher:
                          k: int, offset: int,
                          fetch_fields: bool) -> SearchResult:
         """Root merge of leaf parts: global (score desc, segment_id desc,
-        doc_id desc) order, offset/k slice, optional doc-store fetch."""
+        doc_id desc) order as one lexsort over the concatenated leaf
+        arrays, offset/k slice, optional doc-store fetch."""
         num_hits = sum(c for _, c, _ in parts)
-        frames = []
-        for sid, _cnt, top in parts:
-            if len(top):
-                t = top.copy()
-                t["segment_id"] = sid
-                frames.append(t)
-        if not frames:
+        parts = [(sid, top) for sid, _c, top in parts if len(top)]
+        if not parts:
             return SearchResult(num_hits, [])
-        allc = pd.concat(frames, ignore_index=True)
-        # global merge: score desc, then (segment_id, doc_id) desc
-        allc = allc.sort_values(["score", "segment_id", "doc_id"],
-                                ascending=[False, False, False],
-                                kind="mergesort")
-        winners = allc.iloc[offset:offset + k]
-        hits = self._fetch(winners) if fetch_fields else [
-            SearchHit(float(r.score), str(r.segment_id), int(r.doc_id), {})
-            for r in winners.itertuples()]
-        return SearchResult(num_hits, hits,
-                            max_score=float(allc["score"].iloc[0]))
+        sids = sorted({sid for sid, _ in parts})
+        rank = {sid: i for i, sid in enumerate(sids)}
+        doc = np.concatenate([top["doc_id"].to_numpy(np.int64)
+                              for _, top in parts])
+        score = np.concatenate([top["score"].to_numpy(np.float64)
+                                for _, top in parts])
+        seg = np.repeat([rank[sid] for sid, _ in parts],
+                        [len(top) for _, top in parts])
+        order = np.lexsort((-doc, -seg, -score))
+        winners = [(float(score[i]), sids[seg[i]], int(doc[i]))
+                   for i in order[offset:offset + k]]
+        return SearchResult(num_hits, self._fetch(winners, fetch_fields),
+                            max_score=float(score[order[0]]))
 
     def search_many(self, queries: list, k: int = 10, offset: int = 0,
                     fetch_fields: bool = True,
@@ -2284,55 +2374,29 @@ class IndexSearcher:
             parts.append((sid, cnt, top))
         return parts
 
-    def _fetch(self, winners: pd.DataFrame) -> list[SearchHit]:
-        """Fetch doc keys/tags for winners from their segments' doc maps
-        (two-phase hit join, root.rs:808-889) and verify stored sha256
-        presence; content re-join happens against the source table via
+    def _fetch(self, winners: list[tuple[float, str, int]],
+               fetch_fields: bool = True) -> list[SearchHit]:
+        """Hits for (score, segment_id, doc_id) winners in rank order,
+        with their doc-map rows when fetch_fields: the two-phase hit
+        join (root.rs:808-889), one SegmentReader.doc_rows call per hit
+        segment. A segment's doc table is read once, pinned under the
+        reader cache's QW_READER_CACHE_BYTES budget and addressed by
+        row position (`_seg_doc`); only a docs.parquet above
+        CACHE_FILE_BYTES is re-read per fetch, filtered to the hit ids.
+        Content re-join against the source table happens in
         fetch_content()."""
-        hits: list[SearchHit] = []
-        for sid, grp in winners.groupby("segment_id", sort=False):
-            seg_dir = os.path.join(self.index_dir, "segments", sid)
-            ids = [int(i) for i in grp["doc_id"].tolist()]
-            # nullable-aware read: int64 columns with nulls must stay
-            # integral (pandas' default converts them to float64+NaN,
-            # which renders 1 as 1.0 and NaN as invalid JSON)
-            t = pq.read_table(
-                os.path.join(seg_dir, "docs.parquet"),
-                filters=[("_seg_doc", "in", ids)]).to_pandas(
-                types_mapper={pa.int64(): pd.Int64Dtype(),
-                              pa.uint64(): pd.UInt64Dtype(),
-                              pa.bool_(): pd.BooleanDtype()}.get)
-            t = t.set_index("_seg_doc")
-            # typed fast fields render back to their text form on fetch
-            # (the reference serializes IpAddr canonically on the hit
-            # json path); the sortable hex stays internal
-            ftypes = get_reader(seg_dir, self.tokenizer).meta.get(
-                "field_types", {})
-            for col, ft in ftypes.items():
-                if ft == "ip" and col in t.columns:
-                    t[col] = t[col].map(
-                        lambda v: None if v is None else
-                        hex_to_ip_display(v))
-            for r in grp.itertuples():
-                doc = t.loc[int(r.doc_id)].to_dict()
-                # NA scalars (nullable ints/bools, NaN, NaT) render as
-                # JSON null, never NaN; numpy scalars unbox to python
-                for k, v in doc.items():
-                    if isinstance(v, (list, np.ndarray, dict)):
-                        continue
-                    if v is not None and pd.isna(v):
-                        doc[k] = None
-                    elif isinstance(v, np.generic):
-                        doc[k] = v.item()
-                    elif hasattr(v, "item") and str(type(v)).startswith(
-                            "<class 'pandas"):
-                        doc[k] = v.item()  # pd.Int64 scalar -> int
-                hits.append(SearchHit(float(r.score), sid, int(r.doc_id),
-                                      doc))
-        # restore global rank order
-        key = {(h.segment_id, h.doc_id): h for h in hits}
-        return [key[(r.segment_id, int(r.doc_id))]
-                for r in winners.itertuples()]
+        if not fetch_fields:
+            return [SearchHit(s, sid, d, {}) for s, sid, d in winners]
+        by_seg: dict[str, list[int]] = {}
+        for _s, sid, d in winners:
+            by_seg.setdefault(sid, []).append(d)
+        docs: dict[tuple[str, int], dict] = {}
+        for sid, ids in by_seg.items():
+            reader = get_reader(os.path.join(self.index_dir, "segments",
+                                             sid), self.tokenizer)
+            docs.update(zip([(sid, d) for d in ids], reader.doc_rows(ids)))
+        return [SearchHit(s, sid, d, docs[(sid, d)])
+                for s, sid, d in winners]
 
     def fetch_content(self, result: SearchResult, source_df,
                       verify_sha: bool = True) -> pd.DataFrame:
@@ -2680,12 +2744,11 @@ class IndexSearcher:
         for i, (f, _d) in enumerate(sort_by):
             if f == "_score":
                 score_col = f"_sort{i}"
-        winners = allc[["doc_id", "segment_id"]].copy()
-        winners["score"] = (allc[score_col].astype(float) if score_col
-                            else 0.0)
-        hits = self._fetch(winners) if fetch_fields else [
-            SearchHit(float(r.score), str(r.segment_id), int(r.doc_id), {})
-            for r in winners.itertuples()]
+        scores = (allc[score_col].astype(float).tolist() if score_col
+                  else [0.0] * len(allc))
+        hits = self._fetch(list(zip(scores, allc["segment_id"].tolist(),
+                                    allc["doc_id"].astype(int).tolist())),
+                           fetch_fields)
         last_key = None
         if len(allc):
             last = allc.iloc[-1]

@@ -274,14 +274,19 @@ class SearchHttpServer:
 
     def _searcher(self, index: str) -> IndexSearcher:
         self._check_index(index)
+        d = os.path.join(self.root_dir, index)
         with self._lock:
+            # checked on EVERY request, not only when the searcher is
+            # built: a repeated query is answered from memory (leaf
+            # cache + pinned doc tables), so an index deleted behind the
+            # server's back would otherwise keep serving
+            if not os.path.isdir(d):
+                self._searchers.pop(index, None)
+                raise _ApiError(
+                    404, f"no such index [{index}]",
+                    es_type="index_not_found_exception")
             s = self._searchers.get(index)
             if s is None:
-                d = os.path.join(self.root_dir, index)
-                if not os.path.isdir(d):
-                    raise _ApiError(
-                        404, f"no such index [{index}]",
-                        es_type="index_not_found_exception")
                 s = self._searchers[index] = IndexSearcher(d)
             return s
 
@@ -292,14 +297,20 @@ class SearchHttpServer:
         t0 = _time.perf_counter()
         status = 500
         try:
-            self._dispatch_inner(h, method)
-            status = getattr(h, "_qw_status", 200)
+            status, body, ctype = self._dispatch_inner(h, method)
         finally:
+            # recorded BEFORE the body is written: a scrape made right
+            # after a response must already count it
             self.metrics.end(group, method, status,
                              _time.perf_counter() - t0)
+        h.send_response(status)
+        h.send_header("Content-Type", ctype)
+        h.send_header("Content-Length", str(len(body)))
+        h.end_headers()
+        h.wfile.write(body)
 
     def _dispatch_inner(self, h: BaseHTTPRequestHandler,
-                        method: str) -> None:
+                        method: str) -> tuple[int, bytes, str]:
         try:
             parts = urlsplit(h.path)
             params = dict(parse_qsl(parts.query))
@@ -352,15 +363,8 @@ class SearchHttpServer:
                               "reason": msg},
                     "message": msg, "status": 500}
         if isinstance(resp, _RawBody):
-            body, ctype = resp.data, resp.content_type
-        else:
-            body, ctype = json.dumps(resp).encode(), "application/json"
-        h._qw_status = status
-        h.send_response(status)
-        h.send_header("Content-Type", ctype)
-        h.send_header("Content-Length", str(len(body)))
-        h.end_headers()
-        h.wfile.write(body)
+            return status, resp.data, resp.content_type
+        return status, json.dumps(resp).encode(), "application/json"
 
     # hard bound on BOTH the raw request read (Content-Length checked
     # before buffering) and decompressed output (enforced during

@@ -351,3 +351,41 @@ def test_source_filtering_keeps_sort_cursor_and_highlight(tmp_path):
     r2 = es_search(s, body2, source_includes="lang")
     assert r2["hits"]["hits"][0]["sort"][0] == 1
     assert "highlight" in h0  # content highlighted though excluded
+
+
+def test_search_after_null_cursor_terminates(tmp_path):
+    """A hit missing the sort field echoes a null sort value; fed back
+    as search_after it must not restart the listing (a client paging
+    until empty looped forever on duplicate pages)."""
+    from quickwit_spark.search.es_dsl import es_search
+    n = [2, None, None, 1, None, None, 3, None]
+    pdf = pd.DataFrame({
+        "repo": ["r"] * 8, "path": list("abcdefgh"), "commit": ["c"] * 8,
+        "lang": ["py"] * 8, "n": pd.array(n, dtype="Int64"),
+        "content": ["merge"] * 8})
+    cfg = IndexConfig(index_uid="sa", index_dir=str(tmp_path / "sa"),
+                      sha_col=None, store_cols=("n",))
+    build_index_pandas(pdf, cfg, num_partitions=1)
+    s = IndexSearcher(cfg.index_dir)
+
+    def page_all(sort):
+        body = {"query": {"match": {"content": "merge"}}, "size": 2,
+                "sort": sort}
+        seen = []
+        for _ in range(len(n) + 2):
+            hits = es_search(s, body)["hits"]["hits"]
+            if not hits:
+                return seen
+            seen += [h["_source"]["path"] for h in hits]
+            body["search_after"] = hits[-1]["sort"]
+        raise AssertionError(f"paging did not terminate: {seen}")
+
+    # values-only cursors skip rows tied with the boundary value, and
+    # every missing value ties: the null run ends the listing
+    seen = page_all([{"n": {"order": "asc"}}])
+    assert len(seen) == len(set(seen))
+    assert seen[:3] == ["d", "a", "g"]
+    assert set(seen[3:]) <= {"b", "c", "e", "f", "h"}
+    # a second sort field breaks the ties: every doc exactly once
+    seen = page_all([{"n": {"order": "asc"}}, {"path": {"order": "asc"}}])
+    assert seen == ["d", "a", "g", "b", "c", "e", "f", "h"]

@@ -1,7 +1,7 @@
 """Leaf partial-request cache (reference leaf_cache.rs analog): repeat
 (segment, request) pairs are served from cache with identical results;
 distinct requests miss; returned frames are copy-safe; the LRU bound
-holds. Immutability of content-addressed segments makes invalidation
+holds and a burst of one-off requests does not flush re-used entries. Immutability of content-addressed segments makes invalidation
 unnecessary — also pinned here via the delete-rewrite path."""
 
 import pandas as pd
@@ -110,5 +110,74 @@ def test_lru_bound(idx):
                      fetch_fields=False)
         assert leaf_cache_stats()["entries"] <= 4
     finally:
+        E.LEAF_CACHE_MAX_ENTRIES = old
+        clear_leaf_cache()
+
+
+def test_scan_of_unique_requests_keeps_reused_entries(idx):
+    """Segmented LRU: entries hit once are protected, so a burst of
+    never-repeated requests larger than the cache only churns the
+    probation segment and the re-used request still hits."""
+    import quickwit_spark.search.engine as E
+    s = IndexSearcher(idx)
+    clear_leaf_cache()
+    old = E.LEAF_CACHE_MAX_ENTRIES
+    E.LEAF_CACHE_MAX_ENTRIES = 10
+    try:
+        hot = A.Bool(must=(A.Term("content", "merge"),))
+        s.search(hot, k=5, fetch_fields=False)
+        s.search(hot, k=5, fetch_fields=False)   # promoted on this hit
+        for i in range(40):
+            s.search(A.Bool(must=(A.Term("content", str(i)),)), k=3,
+                     fetch_fields=False)
+        assert leaf_cache_stats()["entries"] <= 10
+        misses = leaf_cache_stats()["misses"]
+        s.search(hot, k=5, fetch_fields=False)
+        assert leaf_cache_stats()["misses"] == misses
+    finally:
+        E.LEAF_CACHE_MAX_ENTRIES = old
+        clear_leaf_cache()
+
+
+def test_concurrent_get_put_keeps_segments_consistent():
+    """HTTP requests run on threads: under forced switching, concurrent
+    lookups and inserts lose no count, never hold a key in both
+    segments and never exceed the bound."""
+    import sys
+    import threading
+
+    import quickwit_spark.search.engine as E
+    clear_leaf_cache()
+    old, old_si = E.LEAF_CACHE_MAX_ENTRIES, sys.getswitchinterval()
+    E.LEAF_CACHE_MAX_ENTRIES = 16
+    errors, calls = [], 2000
+    barrier = threading.Barrier(8)
+
+    def worker(w):
+        try:
+            barrier.wait(timeout=10)
+            for i in range(calls):
+                key = ("k", (w * 7 + i) % 40)
+                if E._leaf_cache_get(key) is None:
+                    E._leaf_cache_put(key, (i, None))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,))
+                   for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        st = leaf_cache_stats()
+        assert st["hits"] + st["misses"] == 8 * calls
+        assert st["entries"] <= 16
+        assert not set(E._LEAF_PROBATION) & set(E._LEAF_PROTECTED)
+    finally:
+        sys.setswitchinterval(old_si)
         E.LEAF_CACHE_MAX_ENTRIES = old
         clear_leaf_cache()
